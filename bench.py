@@ -466,6 +466,28 @@ def _extras(spark, sf_dir: str) -> dict:
     }
 
 
+def _scale_probe_skip(cores: int, env) -> str | None:
+    """Why the scale probe is skipped on this run, or None to run it.
+
+    ``SPARK_GRAFT_SCALE_PROBE=0`` disables it. Below 16 cores it is
+    skipped by default: its budget and per-op costs are sized for a
+    32-core host, and at 8 cores the r14 companion bench timed out
+    (rc=124) inside the probe, producing no scaling evidence at all. An
+    explicit opt-in — ``SPARK_GRAFT_SCALE_PROBE=1`` or any
+    ``SPARK_GRAFT_PROBE_BUDGET`` — runs it on any host."""
+    flag = env.get("SPARK_GRAFT_SCALE_PROBE")
+    if flag == "0":
+        return "disabled by SPARK_GRAFT_SCALE_PROBE=0"
+    if cores >= 16 or flag == "1" or "SPARK_GRAFT_PROBE_BUDGET" in env:
+        return None
+    return (
+        f"low-core run ({cores} cores < 16): probe costs are sized for "
+        "32 cores; the r14 8-core companion bench timed out mid-probe "
+        "(BENCH_r14_c8 rc=124); set SPARK_GRAFT_SCALE_PROBE=1 or "
+        "SPARK_GRAFT_PROBE_BUDGET to run it anyway"
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -604,25 +626,11 @@ def main() -> None:
     # vectors, generated deterministically into a temp dir): single cold
     # runs of the dedup/ANN tier validating the auto-geometry claims at
     # 20-50x fixture scale. Isolated — any failure records an err entry;
-    # SPARK_GRAFT_SCALE_PROBE=0 skips entirely.
+    # see _scale_probe_skip for when it is skipped.
     scale_probe: dict = {}
-    probe_cores = spark.sparkContext.defaultParallelism
-    if os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") == "0":
-        pass
-    elif probe_cores < 16:
-        # R15 (VERDICT r14 #1): the probe's budget and per-op costs are
-        # sized for a 32-core host; at 8 cores every op runs ~4x slower
-        # and the r14 8-core companion bench timed out (rc=124) INSIDE
-        # the probe, producing no scaling evidence at all. A low-core
-        # companion run exists to measure the declared queries' core
-        # scaling, not the probe's — skip it and always emit the JSON.
-        scale_probe = {
-            "skipped": (
-                f"low-core run ({probe_cores} cores < 16): probe costs "
-                "are sized for 32 cores; the r14 8-core companion bench "
-                "timed out mid-probe (BENCH_r14_c8 rc=124)"
-            )
-        }
+    skip = _scale_probe_skip(spark.sparkContext.defaultParallelism, os.environ)
+    if skip:
+        scale_probe = {"skipped": skip}
     else:
         try:
             sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

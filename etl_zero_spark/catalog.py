@@ -12,11 +12,24 @@ pulled to the driver.
 Also carries the PK/FK side metadata the mapper needs: Spark's catalog
 has no constraint objects (the reference introspects them from MySQL,
 mapping.py:39-65), so they travel as plain dicts.
+
+The query surface (``register_views``) keeps a per-session view cache
+so a question does not re-list files, re-infer the parquet schema and
+re-read footers for tables that have not changed. It is scoped to the
+live ``SparkSession`` (it lives on the session object, so a session
+rebuilt after ``stop()`` starts empty), keyed by table path (two
+``sf_dir``s with the same table names do not evict each other), and
+checked on every call against an ``os.stat`` fingerprint of the
+table's files: any rewrite, added or removed part file reloads through
+``load_table``, and a table that has disappeared is dropped. It holds
+only the lazy DataFrame (its plan and the file listing taken when it
+was built), never data.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -141,17 +154,22 @@ def _table_bytes(path: str) -> int | None:
     return None
 
 
+#: Spark byte-string unit letters, in ascending powers of 1024.
+_BYTE_SUFFIXES = "kmgtp"
+
+
 def _parse_byte_conf(v, default: int) -> int:
     """Parse a Spark byte-string conf value ('134217728', '134217728b',
-    '128m', '64mb', '1g', '512k') into bytes. The old
-    ``int(str(v).rstrip('b'))`` was a character strip, not a suffix
-    parse — '128m' silently fell back to the default (ADVICE r14)."""
+    '128m', '64mb', '1g', '512k', '1p') into bytes: every suffix
+    ``JavaUtils.byteStringAs`` accepts (b, k/kb, m/mb, g/gb, t/tb,
+    p/pb, binary multiples). Unparseable values fall back to
+    ``default``."""
     s = str(v).strip().lower()
     if s.endswith("b"):
         s = s[:-1]
     mult = 1
-    if s and s[-1] in "kmgt":
-        mult = 1024 ** ("kmgt".index(s[-1]) + 1)
+    if s and s[-1] in _BYTE_SUFFIXES:
+        mult = 1024 ** (_BYTE_SUFFIXES.index(s[-1]) + 1)
         s = s[:-1]
     try:
         return int(float(s) * mult) if s else default
@@ -250,6 +268,30 @@ def load_table(
     return _spread_if_underparallel(spark, df, path) if spread else df
 
 
+#: Attribute under which a SparkSession carries its query-surface view
+#: cache, {table path: (fingerprint, DataFrame)}. Living on the session
+#: object scopes the cache to it: a session rebuilt after ``stop()`` is
+#: a new object with an empty cache, and the cache is freed with its
+#: session. Holds lazy DataFrames only, never data.
+_VIEW_CACHE_ATTR = "_etl_zero_view_cache"
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """Cheap ``os.stat`` identity of a table's files; None when the
+    table is gone. A single-file table is (inode, size, mtime_ns); a
+    directory table is the sorted (name, size, mtime_ns) of its
+    entries, so a rewrite, an added or a removed part file changes it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        with os.scandir(path) as entries:
+            stats = [(e.name, e.stat()) for e in entries]
+        return tuple(sorted((n, s.st_size, s.st_mtime_ns) for n, s in stats))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
 def register_views(
     spark: SparkSession, sf_dir: str, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:
@@ -258,13 +300,31 @@ def register_views(
     Mirrors the reference exposing every silver table to free SQL
     (front_end.py:215-225) — after this, ``spark.sql`` covers the whole
     SELECT surface.
+
+    Reuses the DataFrame an earlier call loaded for the same table path
+    in the same live session while the table's ``_fingerprint`` is
+    unchanged; otherwise (first call, rewritten files, new session) it
+    loads through ``load_table``. The cache is keyed by path, so
+    callers alternating between ``sf_dir``s do not evict each other,
+    and holds only the lazy DataFrame, not data. A table whose files
+    are gone is left out of the result and dropped from the cache. The
+    view is (re)created on every call, so a name a caller repointed in
+    the meantime is pointed back at the table.
     """
+    cache = vars(spark).setdefault(_VIEW_CACHE_ATTR, {})
     out: dict[str, DataFrame] = {}
     for name in tables or FIXTURE_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
+        path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+        fp = _fingerprint(path)
+        if fp is None:
+            cache.pop(path, None)
             continue
-        df = load_table(spark, sf_dir, name)
+        hit = cache.get(path)
+        if hit is not None and hit[0] == fp:
+            df = hit[1]
+        else:
+            df = load_table(spark, sf_dir, name)
+            cache[path] = (fp, df)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

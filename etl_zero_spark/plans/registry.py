@@ -20,6 +20,10 @@ self-consistency pytest instead (SURVEY §5.2).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
@@ -55,6 +59,32 @@ def query(name: str, operator: str, sql: str | None, description: str = ""):
         return wrapped
 
     return deco
+
+
+#: (prefix, key, pid) -> the scratch directory scratch_dir handed out.
+_SCRATCH: dict[tuple[str, str, int], str] = {}
+
+
+def scratch_dir(prefix: str, key: str) -> str:
+    """One scratch directory per (prefix, key) per process, for queries
+    that write files and return a LAZY DataFrame over them: the files
+    must outlive the call until the caller collects, so the previous
+    invocation's copy is wiped on re-entry instead of on exit, and the
+    last copy is removed at interpreter exit. Disk stays bounded to one
+    copy per key however often the query runs. Queries key by
+    ``sf_dir``, so results over two fixture dirs can be pending at
+    once; the pid keeps a forked child from wiping its parent's
+    directory."""
+    k = (prefix, key, os.getpid())
+    path = _SCRATCH.get(k)
+    if path is None:
+        path = tempfile.mkdtemp(prefix=prefix)
+        _SCRATCH[k] = path
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    else:
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path, exist_ok=True)
+    return path
 
 
 # --------------------------------------------------------------------------
@@ -196,12 +226,10 @@ def cdc1_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "prefix.",
 )
 def s9_s10_sink_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from etl_zero_spark.catalog import Zone
 
     c = load_table(spark, sf_dir, "customer")
-    zone = Zone(tempfile.mkdtemp(prefix="etlzero_s9_"), "golden")
+    zone = Zone(scratch_dir("etlzero_s9_", sf_dir), "golden")
     zone.write_csv(c, "customer")
     s9 = zone.read_csv(spark, "customer", schema=c.schema)
     s10 = c.orderBy("c_custkey").limit(5)

@@ -22,46 +22,17 @@ the capability a 100 TB lake needs instead.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_zero_spark.catalog import load_table
-from etl_zero_spark.plans.registry import query
+from etl_zero_spark.plans.registry import query, scratch_dir
 from etl_zero_spark.sources.snapshots import SnapshotTable
 
 # Deterministic key cuts, derived from max(o_orderkey) so every SF
 # exercises every branch: delete [50%, 75%]; pruned read [0, 25%].
 _DEL_LO, _DEL_HI = 0.5, 0.75
 _READ_HI = 0.25
-
-#: One scratch table per (sf_dir, pid) — the result DataFrame is lazy
-#: (files must outlive this function until the caller collects), so
-#: the PREVIOUS invocation's copy is wiped on re-entry instead of on
-#: exit. Bounds disk to one orders copy per process; bench's cold+3-
-#: warm loop previously leaked four (ADVICE r5).
-_SCRATCH: dict[tuple[str, int], str] = {}
-
-
-def _snap1_scratch(sf_dir: str) -> str:
-    key = (sf_dir, os.getpid())
-    path = _SCRATCH.get(key)
-    if path is None:
-        import atexit
-
-        path = tempfile.mkdtemp(prefix="etlzero_snap1_")
-        _SCRATCH[key] = path
-        # the last copy is reclaimed at interpreter exit (collection
-        # is long done by then); between invocations re-entry wipes
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    else:
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
-    return path
-
 
 _CUTS_SQL = """
     cuts AS (
@@ -115,7 +86,7 @@ def snap1_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     del_lo, del_hi = int(mx * _DEL_LO), int(mx * _DEL_HI)
     read_hi = int(mx * _READ_HI)
 
-    t = SnapshotTable(_snap1_scratch(sf_dir))
+    t = SnapshotTable(scratch_dir("etlzero_snap1_", sf_dir))
     base = o.where(F.col("o_orderkey") % 10 < 7)
     t.commit(
         base.repartitionByRange(4, "o_orderkey").sortWithinPartitions("o_orderkey")

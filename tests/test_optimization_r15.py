@@ -20,6 +20,10 @@ def test_parse_byte_conf_suffixes():
     assert _parse_byte_conf("512k", 1) == 512 * 1024
     assert _parse_byte_conf("garbage", 7) == 7
     assert _parse_byte_conf("", 7) == 7
+    # every JavaUtils.byteStringAs unit, bare and with a trailing 'b'
+    for i, unit in enumerate("kmgtp", start=1):
+        for suffix in (unit, unit + "b", unit.upper() + "B"):
+            assert _parse_byte_conf(f"3{suffix}", 7) == 3 * 1024**i, suffix
 
 
 def test_table_bytes_parquet_only_and_nested(tmp_path):
