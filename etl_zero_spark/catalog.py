@@ -34,6 +34,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Canonical fixture tables (TESTDATA.md) in FK-dependency order.
 FIXTURE_TABLES = [
@@ -354,8 +355,16 @@ class Zone:
             d for d in os.listdir(zdir) if os.path.isdir(os.path.join(zdir, d))
         )
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+    def read(
+        self, spark: SparkSession, table: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """Scan a zone table. Without ``schema`` Spark infers it from a
+        part-file footer, which costs one Spark job; a caller that
+        already holds the schema of what it wrote passes it and the scan
+        launches none (Spark reads every field of it as nullable, as
+        the parquet write stored it)."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
         """S5 overwrite / S6 append sink (data_extraction.py:40-51,80)."""

@@ -23,7 +23,11 @@ nature (distinct / anti-join) and run as separate bounded jobs.
 
 Null semantics: ``not_null`` counts nulls; every OTHER row-level check
 skips nulls (a null price is a nullability problem, not a range
-problem) — compose with ``not_null`` to forbid both.
+problem) — compose with ``not_null`` to forbid both. A check that
+evaluates to NULL on a non-null value (a NULL in an ``in_set``
+allowed list, a range check on a string that is not a number) counts
+as a violation: the row cannot be shown to pass, and ``quarantine``
+would otherwise drop it from both of its outputs.
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: A row-level expectation: name + a Column predicate that is TRUE for
-#: VIOLATING rows (nulls excluded upstream).
+#: VIOLATING rows (nulls excluded upstream, see ``_violates``).
 @dataclass(frozen=True)
 class RowExpectation:
     name: str
@@ -124,6 +128,15 @@ def foreign_key(
     return TableExpectation(f"foreign_key({col})", count)
 
 
+def _violates(e: RowExpectation) -> Column:
+    """Never-NULL predicate: TRUE for rows violating ``e``. Null cells
+    are ``not_null``'s job; a predicate that is NULL on a non-null cell
+    is a violation."""
+    if e.name.startswith("not_null("):
+        return e.violation
+    return F.col(e.col).isNotNull() & F.coalesce(e.violation, F.lit(True))
+
+
 @dataclass
 class ValidationReport:
     n_rows: int
@@ -149,10 +162,7 @@ def validate(
 
     aggs = [F.count(F.lit(1)).alias("__total")]
     for e in row_exps:
-        pred = e.violation
-        if not e.name.startswith("not_null("):
-            pred = F.col(e.col).isNotNull() & pred  # nulls -> not_null's job
-        aggs.append(F.sum(pred.cast("long")).alias(e.name))
+        aggs.append(F.sum(_violates(e).cast("long")).alias(e.name))
     row = df.agg(*aggs).first()
 
     report = ValidationReport(n_rows=int(row["__total"]))
@@ -174,10 +184,7 @@ def quarantine(
     the input is cached — callers on a hot path persist first."""
     bad = F.lit(False)
     for e in expectations:
-        pred = e.violation
-        if not e.name.startswith("not_null("):
-            pred = F.col(e.col).isNotNull() & pred
-        bad = bad | pred
+        bad = bad | _violates(e)
     return df.where(~bad), df.where(bad)
 
 

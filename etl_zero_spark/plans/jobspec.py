@@ -12,6 +12,15 @@ every stage builds lazy DataFrames and materializes only at zone
 boundaries — the reference's per-stage pull-everything-to-the-driver
 round trip (SURVEY §3.1) does not exist here.
 
+A pass launches Spark jobs only for its zone writes and for the schema
+of each source table it scans. The incremental watermark comes from
+the raw tables' parquet footers (sources/incremental.py), and every
+zone table the pass wrote itself is read back with the schema it was
+written with (``Zone.read(..., schema=)``), so no read re-infers it.
+The quarantine gate counts its rows with ``DataFrame.observe`` on the
+clean and quarantine writes, and the aggregates read the
+``transformed_*`` tables back instead of re-running the transforms.
+
 Spec shape (one JSON object instead of five files):
 
     {
@@ -28,17 +37,19 @@ Spec shape (one JSON object instead of five files):
 from __future__ import annotations
 
 import json
+import os
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_zero_spark.catalog import Warehouse, load_table
 from etl_zero_spark.operators.aggregate import aggregate_all_tables
 from etl_zero_spark.operators.cleaning import transform_all_tables
 from etl_zero_spark.operators.mapper import DatasetMapper
-from etl_zero_spark.sources.incremental import IncrementalLoader
+from etl_zero_spark.sources.incremental import IncrementalLoader, schedule_etl_job
 
 
 @dataclass
@@ -67,22 +78,15 @@ def run_pipeline(
     result = PipelineResult()
 
     # -- stage 1: extract (data_extraction.py:110-144) ------------------
-    import os
-
-    loader = IncrementalLoader(os.path.join(warehouse.root, "raw"))
-    for table, cfg in spec.get("extraction", {}).items():
-        src = load_table(spark, source_dir, table)
-        if cfg.get("mode", "full") == "incremental":
-            result.extracted[table] = loader.incremental(
-                spark, src, table, cfg["key"], cfg.get("default", 0)
-            )
-        else:
-            loader.full_refresh(src, table)
-            result.extracted[table] = "full-refresh"
+    extraction = spec.get("extraction", {})
+    sources = {t: load_table(spark, source_dir, t) for t in extraction}
+    loader = IncrementalLoader(os.path.join(warehouse.root, warehouse.raw.name))
+    result.extracted = schedule_etl_job(spark, loader, sources, extraction)
 
     # -- stage 2: map (scheduler.py:51-111) -----------------------------
     raw_tables = {
-        t: warehouse.raw.read(spark, t) for t in warehouse.raw.list_tables()
+        t: warehouse.raw.read(spark, t, sources[t].schema if t in sources else None)
+        for t in warehouse.raw.list_tables()
     }
     if spec.get("mapping", False):
         merged = DatasetMapper(raw_tables, warehouse.fks).merge_tables()
@@ -94,6 +98,9 @@ def run_pipeline(
     # "expectations" block gates them BEFORE the zone write) ------------
     #   "expectations": {"<table>": [
     #       {"check": "not_null"|"in_range"|"in_set"|"matches", ...}]}
+    # The row counts are observed on the two writes themselves
+    # (DataFrame.observe), so the gate adds no Spark job.
+    observed: dict[str, tuple[Observation, int]] = {}
     exp_spec = spec.get("expectations", {})
     if exp_spec:
         from etl_zero_spark.operators import validate as V
@@ -111,21 +118,31 @@ def run_pipeline(
                 continue
             exps = [builders[c["check"]](c) for c in checks]
             clean, bad = V.quarantine(merged[table], exps)
-            merged[table] = clean
-            warehouse.silver_mapping.write(bad, f"quarantine_{table}")
-            rep = V.validate(clean, exps)
-            result.validated[table] = {
-                "clean_rows": rep.n_rows,
-                "passed": rep.passed,
-            }
+            n_bad = Observation()
+            warehouse.silver_mapping.write(
+                bad.observe(n_bad, F.count(F.lit(1)).alias("rows")), f"quarantine_{table}"
+            )
+            n_clean = Observation()
+            merged[table] = clean.observe(n_clean, F.count(F.lit(1)).alias("rows"))
+            observed[table] = (n_clean, n_bad.get["rows"])
 
     for name, df in merged.items():
         warehouse.silver_mapping.write(df, name)
         result.mapped.append(name)
+    for table, (n_clean, quarantined) in observed.items():
+        result.validated[table] = {
+            "clean_rows": n_clean.get["rows"],
+            "quarantined_rows": quarantined,
+            # quarantine's split predicate is never NULL, so no row
+            # that violates a check reaches the clean write
+            "passed": True,
+        }
 
     # -- stage 3: transform + aggregate (scheduler.py:113-183) ----------
     staged = {
-        t: warehouse.silver_mapping.read(spark, t)
+        t: warehouse.silver_mapping.read(
+            spark, t, merged[t].schema if t in merged else None
+        )
         for t in warehouse.silver_mapping.list_tables()
         if not t.startswith("quarantine_")
     }
@@ -137,7 +154,13 @@ def run_pipeline(
 
     agg_params = spec.get("aggregation", {})
     if agg_params:
-        aggregated = aggregate_all_tables(transformed, agg_params)
+        # aggregate what was just written, not the transform plan again
+        written = {
+            name: warehouse.silver.read(spark, f"transformed_{name}", df.schema)
+            for name, df in transformed.items()
+            if name in agg_params
+        }
+        aggregated = aggregate_all_tables(written, agg_params)
         for name, df in aggregated.items():
             warehouse.silver.write(df, f"agg_{name}")  # scheduler.py:156-171
             result.aggregated.append(f"agg_{name}")

@@ -5,7 +5,7 @@ Port of the reference's incremental extraction
 
 * first run of a table -> full load (create-if-missing semantics,
   data_extraction.py:63-81);
-* later runs -> probe ``MAX(key)`` in the target (S3,
+* later runs -> the watermark ``MAX(key)`` of the target (S3,
   data_extraction.py:86-92, default 0 on empty), then scan
   ``WHERE key > watermark`` (S2, data_extraction.py:95-96) and append
   (S6, data_extraction.py:102).
@@ -14,13 +14,21 @@ Differences by design (SURVEY §7 hard-part 4): the reference keys on
 whatever the *first column* is and compares it as a quoted string
 (lexicographic); we key on a declared, typed key column so the
 comparison is typed and the predicate can be pushed into the scan
-(parquet min/max pruning / JDBC WHERE pushdown). At 100 TB the
-watermark probe is a metadata-only parquet min/max read plus one
-column scan — never a full materialization.
+(parquet min/max pruning / JDBC WHERE pushdown).
+
+The watermark comes from the target's parquet footers
+(``footer_watermark``): the row-group max statistics of the key,
+read on the driver with pyarrow, so a cycle launches no Spark job to
+find it — only the delta append is a job. When the footers cannot
+give the exact answer (the key is not a signed integer, a row group
+carries no min/max, the target is a nested directory layout) the
+loader falls back to reading the target with Spark and running
+``watermark_probe``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
@@ -33,6 +41,66 @@ def watermark_probe(target: DataFrame, key: str, default=0):
     row = target.agg(F.max(F.col(key)).alias("w")).first()
     w = row["w"] if row is not None else None
     return default if w is None else w
+
+
+def _is_signed_int(col) -> bool:
+    """A parquet leaf whose values Spark reads as a signed integer with
+    the physical order of its footer statistics: INT32/INT64 with no
+    logical annotation (Spark's int/long) or a signed INT annotation
+    (byte/short). Dates, timestamps, decimals and unsigned ints are out."""
+    if col.physical_type not in ("INT32", "INT64"):
+        return False
+    lt = col.logical_type
+    if lt.type == "NONE":
+        return col.converted_type == "NONE"
+    return lt.type == "INT" and json.loads(lt.to_json()).get("isSigned", False)
+
+
+def footer_watermark(path: str, key: str, default=0):
+    """S3 without a Spark job: ``MAX(key)`` over the row-group
+    statistics of every part file under ``path`` (the files Spark
+    would read: names starting with ``_`` or ``.`` are skipped).
+    Empty files and all-null row groups contribute nothing; no value at
+    all gives ``default``.
+
+    Returns None when the footers cannot answer exactly — the key is
+    not a top-level signed INT32/INT64 column, a non-empty row group
+    has no min/max, a file is unreadable, or ``path`` holds
+    subdirectories (a partitioned layout) — and the caller falls back
+    to ``watermark_probe``. (With ``default=None`` an empty target also
+    reads as None; the fallback then gives the same answer.)"""
+    import pyarrow.parquet as pq
+
+    try:
+        with os.scandir(path) as entries:
+            names = sorted((e.name, e.is_file()) for e in entries)
+    except OSError:
+        return None
+    best = None
+    for name, is_file in names:
+        if name.startswith(("_", ".")):
+            continue
+        if not is_file:
+            return None
+        try:
+            md = pq.read_metadata(os.path.join(path, name))
+        except (OSError, ValueError):  # unreadable footer: ask Spark
+            return None
+        idx = next((i for i in range(md.num_columns)
+                    if md.schema.column(i).path == key), None)
+        if idx is None or not _is_signed_int(md.schema.column(idx)):
+            return None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(idx).statistics
+            if st is not None and st.has_min_max:
+                best = st.max if best is None else max(best, st.max)
+            elif not (st is not None and st.has_null_count
+                      and st.null_count == rg.num_rows):
+                return None
+    return default if best is None else best
 
 
 def incremental_scan(source: DataFrame, key: str, watermark) -> DataFrame:
@@ -78,8 +146,10 @@ class IncrementalLoader:
         if not self._exists(table):
             self.full_refresh(source, table)
             return "initial-full-load"
-        target = spark.read.parquet(self._path(table))
-        w = watermark_probe(target, key, default=default)
+        w = footer_watermark(self._path(table), key, default=default)
+        if w is None:
+            target = spark.read.parquet(self._path(table))
+            w = watermark_probe(target, key, default=default)
         delta = incremental_scan(source, key, w)
         delta.write.mode("append").parquet(self._path(table))
         return "appended-delta"

@@ -2,11 +2,21 @@
 watermark probe with default, delta append — data_extraction.py:59-107
 parity at the semantic level."""
 
+import datetime
+
+import pytest
+
+from etl_zero_spark.sources import incremental as inc
 from etl_zero_spark.sources.incremental import (
     IncrementalLoader,
+    footer_watermark,
     incremental_scan,
     watermark_probe,
 )
+
+
+def _spark_max(spark, path, key, default=0):
+    return watermark_probe(spark.read.parquet(path), key, default=default)
 
 
 def test_watermark_probe_default_on_empty(spark):
@@ -41,6 +51,94 @@ def test_loader_full_then_delta(spark, tmp_path):
     # idempotent when no new keys
     loader.incremental(spark, src2, "t", "k")
     assert loader.read(spark, "t").count() == 4
+
+
+def test_footer_watermark_multi_append_matches_spark(spark, tmp_path):
+    path = str(tmp_path / "t")
+    for lo, hi in [(0, 10), (10, 25), (25, 26), (40, 45)]:
+        spark.range(lo, hi, numPartitions=2).selectExpr(
+            "id AS k", "cast(id AS string) AS v"
+        ).write.mode("append").parquet(path)
+    assert footer_watermark(path, "k") == _spark_max(spark, path, "k") == 44
+
+
+def test_footer_watermark_zero_row_file_gives_default(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([], "k long, v string").write.parquet(path)
+    assert footer_watermark(path, "k", default=-1) == -1
+    assert _spark_max(spark, path, "k", default=-1) == -1
+    # a zero-row part file beside real ones changes nothing
+    spark.createDataFrame([(3, "a")], "k long, v string").write.mode("append").parquet(path)
+    assert footer_watermark(path, "k") == _spark_max(spark, path, "k") == 3
+
+
+def test_footer_watermark_all_null_key_gives_default(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(None, "a"), (None, "b")], "k long, v string").write.parquet(path)
+    assert footer_watermark(path, "k", default=7) == 7
+    assert _spark_max(spark, path, "k", default=7) == 7
+
+
+def test_footer_watermark_int32_key(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(5, "a"), (-3, "b"), (None, "c")], "k int, v string").write.parquet(path)
+    assert footer_watermark(path, "k") == _spark_max(spark, path, "k") == 5
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        ("k string", [("b",), ("a",)]),
+        ("k timestamp", [(datetime.datetime(2024, 1, 2),)]),
+    ],
+)
+def test_footer_watermark_falls_back_for_non_integer_key(spark, tmp_path, ddl, rows):
+    path = str(tmp_path / "t")
+    spark.createDataFrame(rows, ddl).write.parquet(path)
+    assert footer_watermark(path, "k") is None
+
+
+def test_footer_watermark_falls_back_without_statistics(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(pa.table({"k": [1, 9]}), str(path / "part-0.parquet"),
+                   write_statistics=False)
+    assert footer_watermark(str(path), "k") is None
+
+
+def test_footer_watermark_falls_back_for_partitioned_target(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "x"), (2, "y")], "k long, p string").write.partitionBy(
+        "p"
+    ).parquet(path)
+    assert footer_watermark(path, "k") is None
+
+
+def test_loader_watermark_skips_spark_on_integer_key(spark, tmp_path, monkeypatch):
+    """An integer key's watermark comes from the footers: the Spark
+    probe is never called, and the delta is still exact."""
+    loader = IncrementalLoader(str(tmp_path))
+    src1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
+    loader.incremental(spark, src1, "t", "k")
+
+    def no_probe(*a, **k):
+        raise AssertionError("Spark watermark probe called")
+
+    monkeypatch.setattr(inc, "watermark_probe", no_probe)
+    src2 = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
+    assert loader.incremental(spark, src2, "t", "k") == "appended-delta"
+    assert sorted(r.k for r in loader.read(spark, "t").collect()) == [1, 2, 3]
+
+
+def test_loader_string_key_uses_spark_probe(spark, tmp_path):
+    loader = IncrementalLoader(str(tmp_path))
+    loader.incremental(spark, spark.createDataFrame([("a",), ("b",)], ["k"]), "t", "k")
+    src = spark.createDataFrame([("a",), ("b",), ("c",)], ["k"])
+    assert loader.incremental(spark, src, "t", "k", default="") == "appended-delta"
+    assert sorted(r.k for r in loader.read(spark, "t").collect()) == ["a", "b", "c"]
 
 
 def test_csv_sink_roundtrip(spark, tmp_path):

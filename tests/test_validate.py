@@ -129,6 +129,30 @@ def test_quarantine_split(spark, dirty):
     assert 1 in {r.id for r in clean.collect()}
 
 
+@pytest.mark.parametrize(
+    "make, lost",
+    [
+        # NULL in the allowed list: "X" IN ('O', NULL) is NULL, not FALSE
+        (lambda: V.in_set("st", ["O", None]), "X"),
+        # range check on a string that is not a number: the cast is NULL
+        (lambda: V.in_range("q", 1, 50), "abc"),
+    ],
+)
+def test_quarantine_keeps_rows_whose_check_is_null(spark, make, lost):
+    """A check that evaluates to NULL on a non-null cell quarantines the
+    row: clean + quarantined is every input row, and ``validate``
+    counts it."""
+    df = spark.createDataFrame(
+        [(1, "O", "5"), (2, "X", "abc"), (3, None, None)], "id long, st string, q string"
+    )
+    exp = make()
+    clean, bad = V.quarantine(df, [exp])
+    assert clean.count() + bad.count() == df.count()
+    assert {r.id for r in bad.collect()} == {2}
+    assert lost in {r[exp.col] for r in bad.collect()}
+    assert V.validate(df, [exp]).violations[exp.name] == 1
+
+
 def test_expectation_arg_validation(spark, dirty):
     with pytest.raises(ValueError, match="lo and/or hi"):
         V.in_range("price")

@@ -324,6 +324,38 @@ def _band_point_1m(row: dict) -> float | None:
     return None
 
 
+#: Input size of each corpus-pipeline rung, in millions of documents.
+_CORPUS_RUNGS = {"corpus_pipeline_1m": 1, "corpus_pipeline_2m": 2,
+                 "corpus_pipeline_4m": 4, "corpus_pipeline_8m": 8}
+
+
+def preflight_estimate(name: str, done: dict) -> float | None:
+    """Seconds probe ``name`` is expected to take, from the results of
+    the probes completed so far (``done``: name -> result dict, in run
+    order); None before any has completed.
+
+    The worst of the last completed probe, the running median and 10 s
+    (the probe list is roughly cost-ordered, so the recent past bounds
+    the near future). A corpus-pipeline rung above 1M doubles its
+    input, so the recent past underestimates it: its estimate is at
+    least the last completed rung scaled by the input-size ratio (2x
+    from the rung just below). The 1M rung's in-probe corpus report
+    (``report_sec``) is left out of that scaling, because the larger
+    rungs do not run it."""
+    done = {n: r for n, r in done.items()
+            if isinstance(r, dict) and isinstance(r.get("sec"), (int, float))}
+    if not done:
+        return None
+    secs = [r["sec"] for r in done.values()]
+    est = max(secs[-1], statistics.median(secs), 10.0)
+    rungs = [(n, r["sec"] - r.get("report_sec", 0))
+             for n, r in done.items() if n in _CORPUS_RUNGS]
+    if _CORPUS_RUNGS.get(name, 1) > 1 and rungs:
+        last, sec = rungs[-1]
+        est = max(est, sec * _CORPUS_RUNGS[name] / _CORPUS_RUNGS[last])
+    return est
+
+
 def run_probe(spark, probe_dir: str = PROBE_DIR, budget_s: float | None = None) -> dict:
     """One cold run per op; failures record an err string, never raise.
 
@@ -1504,25 +1536,18 @@ def run_probe(spark, probe_dir: str = PROBE_DIR, budget_s: float | None = None) 
         # R15 per-op preflight (VERDICT r14 #1): the budget used to be
         # checked only BETWEEN ops, so one op launched with seconds of
         # budget left could overshoot the driver's whole window. Gate
-        # each launch on a conservative next-op estimate — the worst of
-        # the last completed op and the running median (this list is
-        # roughly cost-ordered, so the recent past bounds the near
-        # future) — and record an honest skip instead of overshooting.
-        done_secs = [
-            r["sec"] for r in out.values()
-            if isinstance(r, dict) and isinstance(r.get("sec"), (int, float))
-        ]
-        if done_secs:
-            est = max(done_secs[-1], statistics.median(done_secs), 10.0)
-            if elapsed + est > budget_s:
-                out[name] = {
-                    "skipped": (
-                        f"preflight: ~{est:.0f}s estimated, "
-                        f"{budget_s - elapsed:.0f}s of budget left"
-                    )
-                }
-                print(f"# probe {name}: {out[name]}", file=sys.stderr)
-                continue
+        # each launch on a conservative next-op estimate and record an
+        # honest skip instead of overshooting.
+        est = preflight_estimate(name, out)
+        if est is not None and elapsed + est > budget_s:
+            out[name] = {
+                "skipped": (
+                    f"preflight: ~{est:.0f}s estimated, "
+                    f"{budget_s - elapsed:.0f}s of budget left"
+                )
+            }
+            print(f"# probe {name}: {out[name]}", file=sys.stderr)
+            continue
         if name == "corpus_pipeline_8m":
             # R14 disk preflight: the 8M run's in-flight shuffle plus
             # retained stage caches need ~110+ GB of scratch — both
@@ -1545,38 +1570,13 @@ def run_probe(spark, probe_dir: str = PROBE_DIR, budget_s: float | None = None) 
                 }
                 print(f"# probe {name}: {out[name]}", file=sys.stderr)
                 continue
-        if name in (
-            "corpus_pipeline_2m", "corpus_pipeline_4m",
-            "corpus_pipeline_8m",
-        ):
-            # the composed pipeline costs ~Nx the 1M row's
-            # pipeline-only time; running it into a nearly-spent
-            # budget would blow well past the cap mid-probe (the
-            # budget check is per-probe, not preemptive), so it needs
-            # this much left
-            scale = {
-                "corpus_pipeline_2m": 2.0,
-                "corpus_pipeline_4m": 4.0,
-                "corpus_pipeline_8m": 8.0,
-            }[name]
-            remaining = budget_s - (time.perf_counter() - t_start)
-            est = scale * max(
-                out.get("corpus_pipeline_1m", {}).get("sec", 120) or 120,
-                60,
-            ) - scale * out.get("corpus_pipeline_1m", {}).get(
-                "report_sec", 0
-            )
-            if remaining < est:
-                out[name] = {
-                    "skipped": f"needs ~{est:.0f}s, {remaining:.0f}s left"
-                }
-                print(f"# probe {name}: {out[name]}", file=sys.stderr)
-                continue
-            {
-                "corpus_pipeline_2m": generate_2m,
-                "corpus_pipeline_4m": generate_4m,
-                "corpus_pipeline_8m": generate_8m,
-            }[name](spark)
+        generate_rung = {
+            "corpus_pipeline_2m": generate_2m,
+            "corpus_pipeline_4m": generate_4m,
+            "corpus_pipeline_8m": generate_8m,
+        }.get(name)
+        if generate_rung is not None:
+            generate_rung(spark)
         if name in (
             "report_1m", "bm25_1m", "split_harden_1m",
             "contamination_1m", "corpus_pipeline_1m"
